@@ -1249,6 +1249,8 @@ def page_blocks(runs: list[Run], figs: list[Fig], page_no: int) -> list[PdfBlock
 # top level
 # ---------------------------------------------------------------------------
 PDF_MAGIC = b"%PDF-"
+# the JVM routing sniff (operators.extract_op.is_pdf_col) reads the same window
+PDF_SNIFF_BYTES = 1024
 
 
 def is_pdf(payload: bytes | None) -> bool:
@@ -1256,7 +1258,7 @@ def is_pdf(payload: bytes | None) -> bool:
     format, ``convert/manager.py:1554-1565``; a crawl corpus needs content
     sniffing). Spec allows junk before the header within the first 1024
     bytes."""
-    return payload is not None and PDF_MAGIC in payload[:1024]
+    return payload is not None and PDF_MAGIC in payload[:PDF_SNIFF_BYTES]
 
 
 def parse_pdf_pages(data: bytes) -> list[list[PdfBlock]]:

@@ -24,15 +24,12 @@ table. Design points, each mapped to reference behavior:
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-if TYPE_CHECKING:  # pragma: no cover
-    pass
 
 SPAN_TYPE = T.ArrayType(
     T.StructType(
@@ -97,8 +94,6 @@ def with_document_identity(results: DataFrame) -> DataFrame:
 
     A pure codegen projection over the FINAL rows, so the sliced and
     single-shot paths stamp byte-identical values by construction."""
-    from pyspark.sql import functions as F
-
     from docling_jobkit_spark.functions.scalar import content_hash
 
     failed = F.col("status") == "FAILURE"
@@ -118,6 +113,31 @@ def with_document_identity(results: DataFrame) -> DataFrame:
     )
 
 
+def is_pdf_col(payload_col="html") -> Column:
+    """JVM twin of ``extractor.pdf.is_pdf``: the ``%PDF-`` magic inside
+    the first PDF_SNIFF_BYTES *bytes*. Binary ``substring`` and
+    ``contains`` compare raw bytes, so no character decoding can shift
+    the window and the two sniffs agree on every payload. False for NULL."""
+    from docling_jobkit_spark.extractor.pdf import PDF_MAGIC, PDF_SNIFF_BYTES
+
+    c = F.col(payload_col) if isinstance(payload_col, str) else payload_col
+    head = F.substring(c, 1, PDF_SNIFF_BYTES)
+    return c.isNotNull() & F.contains(head, F.lit(PDF_MAGIC))
+
+
+def format_flag_col(payload_format: str, payload_col="html") -> Column:
+    """Per-row ``_is_pdf`` routing flag: a literal for "html" / "pdf", the
+    JVM byte sniff for "auto" (Common-Crawl WARC payload mixes; the
+    reference resolves a backend per document, manager.py:1554-1565)."""
+    if payload_format == "html":
+        return F.lit(False)
+    if payload_format == "pdf":
+        return F.lit(True)
+    if payload_format == "auto":
+        return is_pdf_col(payload_col)
+    raise ValueError(f"payload_format must be html|pdf|auto, got {payload_format!r}")
+
+
 def _extract_batches(
     batches: Iterator[pd.DataFrame], max_bytes: int | None, profile: str
 ) -> Iterator[pd.DataFrame]:
@@ -126,20 +146,20 @@ def _extract_batches(
     # travels as its NAME and resolves once per worker — the analog of
     # the reference's options-hash converter cache (manager.py:369-479)
     from docling_jobkit_spark.extractor.extract import PROFILES, extract
+    from docling_jobkit_spark.extractor.pdf import extract_pdf
 
     prof = PROFILES[profile]
 
-    for pdf in batches:
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist()
-        out: dict[str, list] = {
-            "url": [], "status": [], "extracted_text": [], "spans": [],
-            "error": [], "n_pages": [], "n_bytes": [], "n_spans": [],
-            "timings": [],
-        }
-        for url, html in zip(urls, htmls):
-            payload = bytes(html) if html is not None else None
-            res = extract(payload, url, max_bytes=max_bytes, profile=prof)
+    for batch in batches:
+        out: dict[str, list] = {f.name: [] for f in RESULT_SCHEMA.fields}
+        for url, raw, pdf_flag in zip(
+            batch["url"].tolist(), batch["html"].tolist(), batch["_is_pdf"].tolist()
+        ):
+            payload = bytes(raw) if raw is not None else None
+            if pdf_flag:
+                res = extract_pdf(payload, url, max_bytes=max_bytes)
+            else:
+                res = extract(payload, url, max_bytes=max_bytes, profile=prof)
             out["url"].append(url)
             out["status"].append(res.status)
             out["extracted_text"].append(res.text)
@@ -154,60 +174,39 @@ def _extract_batches(
         yield pd.DataFrame(out)
 
 
-def extract_documents(
-    pages: DataFrame,
-    max_bytes: int | None = None,
-    profile: str = "default",
+def extract_flagged(
+    pages: DataFrame, max_bytes: int | None = None, profile: str = "default"
 ) -> DataFrame:
-    """pages(url, html, ...) → results(RESULT_SCHEMA).
+    """pages(url, html, _is_pdf) → results(FULL_RESULT_SCHEMA): ONE
+    mapInPandas that sends each row to the PDF layout extractor or the
+    HTML extractor on its carried flag (see ``format_flag_col``).
 
-    Column pruning: only (url, html) cross the Arrow boundary — Catalyst
-    prunes the parquet scan down to those two columns (verify with
-    ``.explain``: ReadSchema contains url,html only). Output carries the
-    document-identity columns (FULL_RESULT_SCHEMA).
-    """
-    pruned = pages.select("url", "html")
+    Column pruning: only (url, html, _is_pdf) cross the Arrow boundary —
+    Catalyst prunes the parquet scan down to the payload columns (verify
+    with ``.explain``: ReadSchema contains url,html only)."""
+    pruned = pages.select("url", "html", "_is_pdf")
     mapped = pruned.mapInPandas(
         lambda it: _extract_batches(it, max_bytes, profile), schema=RESULT_SCHEMA
     )
     return with_document_identity(mapped)
 
 
-def _extract_pdf_batches(
-    batches: Iterator[pd.DataFrame],
-    max_bytes: int | None,
-    payload_col: str,
-    auto: bool,
-    profile: str,
-) -> Iterator[pd.DataFrame]:
-    from docling_jobkit_spark.extractor.extract import PROFILES, extract
-    from docling_jobkit_spark.extractor.pdf import extract_pdf, is_pdf
+def _flagged(pages: DataFrame, payload_format: str, payload_col: str) -> DataFrame:
+    return pages.select(
+        "url",
+        F.col(payload_col).alias("html"),
+        format_flag_col(payload_format, payload_col).alias("_is_pdf"),
+    )
 
-    prof = PROFILES[profile]
-    for batch in batches:
-        urls = batch["url"].tolist()
-        payloads = batch[payload_col].tolist()
-        out: dict[str, list] = {
-            "url": [], "status": [], "extracted_text": [], "spans": [],
-            "error": [], "n_pages": [], "n_bytes": [], "n_spans": [],
-            "timings": [],
-        }
-        for url, raw in zip(urls, payloads):
-            payload = bytes(raw) if raw is not None else None
-            if auto and not (payload is not None and is_pdf(payload)):
-                res = extract(payload, url, max_bytes=max_bytes, profile=prof)
-            else:
-                res = extract_pdf(payload, url, max_bytes=max_bytes)
-            out["url"].append(url)
-            out["status"].append(res.status)
-            out["extracted_text"].append(res.text)
-            out["spans"].append(res.spans)
-            out["error"].append(res.error.as_dict() if res.error else None)
-            out["n_pages"].append(res.n_pages)
-            out["n_bytes"].append(len(payload) if payload is not None else 0)
-            out["n_spans"].append(len(res.spans))
-            out["timings"].append(res.timings)
-        yield pd.DataFrame(out)
+
+def extract_documents(
+    pages: DataFrame,
+    max_bytes: int | None = None,
+    profile: str = "default",
+) -> DataFrame:
+    """pages(url, html, ...) → results(FULL_RESULT_SCHEMA) through the
+    HTML extractor."""
+    return extract_flagged(_flagged(pages, "html", "html"), max_bytes, profile)
 
 
 def extract_pdf_documents(
@@ -218,14 +217,8 @@ def extract_pdf_documents(
     """pages(url, <payload_col>) → results(FULL_RESULT_SCHEMA) through the
     from-scratch PDF layout extractor (extractor/pdf.py — the analog of
     the reference's PDF pipeline selection, ``convert/manager.py:
-    1672-1723``). Same operator shape as ``extract_documents``: Arrow
-    batches, column-pruned scan, failures as rows."""
-    pruned = pages.select("url", payload_col)
-    mapped = pruned.mapInPandas(
-        lambda it: _extract_pdf_batches(it, max_bytes, payload_col, False, "default"),
-        schema=RESULT_SCHEMA,
-    )
-    return with_document_identity(mapped)
+    1672-1723``)."""
+    return extract_flagged(_flagged(pages, "pdf", payload_col), max_bytes)
 
 
 def extract_documents_auto(
@@ -234,15 +227,10 @@ def extract_documents_auto(
     payload_col: str = "html",
     profile: str = "default",
 ) -> DataFrame:
-    """Mixed-corpus flagship map: per-row content sniff routes each
-    payload to the PDF extractor (``%PDF-`` magic within the first 1 KB)
-    or the HTML extractor — the reference's per-document backend
-    selection (``convert/manager.py:1554-1565``) re-expressed as one
-    format-dispatching ``mapInPandas`` so a crawl table whose binary
-    column mixes formats converts in a single pass."""
-    pruned = pages.select("url", payload_col)
-    mapped = pruned.mapInPandas(
-        lambda it: _extract_pdf_batches(it, max_bytes, payload_col, True, profile),
-        schema=RESULT_SCHEMA,
-    )
-    return with_document_identity(mapped)
+    """Mixed-corpus flagship map: the JVM byte sniff (``is_pdf_col``, the
+    same ``%PDF-``-within-1024-bytes test as ``extractor.pdf.is_pdf``)
+    flags each row, and the one map sends it to the PDF or the HTML
+    extractor — a crawl table whose binary column mixes formats converts
+    in a single pass. The sliced router (``slices.extract_routed``)
+    routes on the same flag, so both paths agree on every row's format."""
+    return extract_flagged(_flagged(pages, "auto", payload_col), max_bytes, profile)

@@ -1,4 +1,5 @@
-"""Page-slice fan-out + reassembly (F1/F2 in SURVEY §2.3).
+"""Page-slice fan-out + reassembly (F1/F2 in SURVEY §2.3), and the one
+router that sends each document to the direct map or the fan-out.
 
 The reference splits huge PDFs into page ranges, converts slices
 concurrently, and reassembles in slice order:
@@ -9,31 +10,42 @@ concurrently, and reassembles in slice order:
 - shared-payload intent (slices reference plasma bytes, never copy the
   whole doc per slice): ``serve_deployment.py:1253-1317``.
 
-Spark-first re-expression:
-- page COUNTING is pure JVM (split on the literal marker — binary→string
-  cast is an unchecked byte wrap, so this works even on invalid UTF-8);
-- the SPLIT materializes one row per slice carrying ONLY that slice's
-  pages' bytes (one mapInPandas pass over oversized docs — the payload
-  crosses the Arrow boundary once, not once per slice);
+Spark-first re-expression (``extract_routed``), one code path for html,
+pdf and mixed corpora:
+- ROUTING is pure JVM: one per-row ``_is_pdf`` flag (a literal for a
+  declared format, the byte sniff ``extract_op.is_pdf_col`` for "auto" —
+  the same test as ``extractor.pdf.is_pdf``) selects the matching page
+  count estimate (``page_count_col`` / ``pdf_page_count_col``), and the
+  estimate picks the branch. No Python runs to route;
+- small docs take an optional caller spread (the pipeline's salted
+  repartition) into ONE direct map that dispatches per row on the flag;
+- big docs are SPLIT where the scan put them — one mapInPandas that
+  emits one row per slice carrying ONLY that slice's bytes (html: pages
+  re-joined by the marker; pdf: self-contained sub-PDFs from
+  ``extractor/pdf.py::split_pdf``) — so whole giant payloads never cross
+  a shuffle and cross the Arrow boundary once;
 - slice rows are hash-REPARTITIONED on (_doc_key, slice_index) before
-  extraction, so the slices of one giant document genuinely run on many
-  cores — the whole point of the fan-out: a 400-page doc would otherwise
-  pin one task for minutes;
+  ONE slice-extract map, so the slices of one giant document genuinely
+  run on many cores — a 400-page doc would otherwise pin one task for
+  minutes;
 - REASSEMBLY groups by a per-input-row ``_doc_key`` (urls are NOT unique —
   the corpus deliberately contains duplicate urls with different
   payloads; grouping by url would interleave two documents' slices);
 - byte-exactness is by construction: ``extract()`` DEFINES full-document
   text as the page-wise extraction joined by PAGE_JOIN, and a slice's
-  payload is exactly its pages re-joined by the marker (see extract.py).
+  payload is exactly its pages re-joined by the marker (see extract.py);
+  PDF layout analysis is per-page and a sub-PDF carries exactly its
+  pages' object closure.
 
-Only oversized documents are routed here (``extract_documents_sliced``),
-so the slice shuffle touches a small fraction of rows — and only
-slice-sized payloads, never whole documents.
+One commit group of the pipeline therefore plans 3 scans (small, big,
+admission-rejected), 3 exchanges (salted spread, slice spread,
+reassembly) and 4 Python nodes, whatever the payload format.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import re
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -45,11 +57,14 @@ from docling_jobkit_spark.operators.extract_op import (
     ERROR_TYPE,
     RESULT_SCHEMA,
     SPAN_TYPE,
-    extract_documents,
+    extract_flagged,
+    format_flag_col,
+    is_pdf_col,
     with_document_identity,
 )
 
 PAGE_BREAK_STR = "<!--PAGE_BREAK-->"
+_PAGE_PREFIX = re.compile(r"^p(\d+)/")  # a pdf span path's page number
 
 SLICE_SCHEMA = T.StructType(
     [
@@ -57,9 +72,9 @@ SLICE_SCHEMA = T.StructType(
         T.StructField("url", T.StringType()),
         T.StructField("slice_index", T.IntegerType()),
         T.StructField("slice_html", T.BinaryType()),
+        T.StructField("is_pdf", T.BooleanType()),
         T.StructField("clean", T.BooleanType()),
         T.StructField("page_lo", T.IntegerType()),
-        T.StructField("page_hi", T.IntegerType()),
         T.StructField("n_pages", T.IntegerType()),
         T.StructField("n_bytes", T.LongType()),
     ]
@@ -81,127 +96,226 @@ SLICE_RESULT_SCHEMA = T.StructType(
 )
 
 
+def _occurrences(s: Column, needle: str) -> Column:
+    """Non-overlapping substring count as a LENGTH DIFFERENCE (replace the
+    needle with '' and divide the shrinkage by its length) instead of
+    ``size(split(...))``: split would materialize every page substring
+    just to count them, doubling transient memory for every large doc on
+    the admission path (a 70 MB doc briefly held 140 MB per row)."""
+    return (
+        F.length(s) - F.length(F.replace(s, F.lit(needle), F.lit("")))
+    ) / F.lit(len(needle))
+
+
 def page_count_col(html_col="html") -> Column:
     """JVM-side page count: marker occurrences + 1, 0 for NULL payloads.
 
     ``cast(binary as string)`` wraps the bytes unchecked and the marker is
     pure ASCII, so the count is correct even for payloads that are not
     valid UTF-8 (verified by test). No Python, no Arrow crossing — the
-    routing decision costs a codegen projection.
-
-    Occurrences are counted as a LENGTH DIFFERENCE (replace the marker
-    with '' and divide the shrinkage by the marker length) instead of
-    ``size(split(...))``: split would materialize every page substring
-    just to count them, doubling transient memory for every large doc on
-    the admission path (a 70 MB doc briefly held 140 MB per row)."""
+    routing decision costs a codegen projection."""
     c = F.col(html_col) if isinstance(html_col, str) else html_col
-    s = c.cast("string")
-    marker_len = len(PAGE_BREAK_STR)
-    n_markers = (
-        F.length(s) - F.length(F.replace(s, F.lit(PAGE_BREAK_STR), F.lit("")))
-    ) / F.lit(marker_len)
+    n_markers = _occurrences(c.cast("string"), PAGE_BREAK_STR)
     return (
         F.when(c.isNull(), F.lit(0)).otherwise(n_markers + F.lit(1)).cast("int")
     )
 
 
-def with_page_count(pages: DataFrame) -> DataFrame:
-    return pages.withColumn("n_pages", page_count_col("html"))
+def pdf_page_count_col(payload_col="pdf") -> Column:
+    """JVM-side PDF page-count ESTIMATE for slice routing: occurrences of
+    the page-leaf marker ``/Type /Page`` (both spacings) minus the
+    ``/Type /Pages`` tree nodes the shorter needle also matches, over the
+    unchecked binary→string wrap. Payloads failing the ``%PDF-`` byte
+    sniff estimate 1 (the direct map handles them). Counting bytes this
+    way can miss pages (object-stream PDFs) or over-count (the marker
+    inside compressed data) — both mis-routes are output-identical, see
+    ``extract_routed``; exact counting stays in the Python
+    ``pdf_page_count`` used by the splitter itself."""
+    c = F.col(payload_col) if isinstance(payload_col, str) else payload_col
+    s = c.cast("string")
+    est = (
+        _occurrences(s, "/Type /Page")
+        - _occurrences(s, "/Type /Pages")
+        + _occurrences(s, "/Type/Page")
+        - _occurrences(s, "/Type/Pages")
+    )
+    return (
+        F.when(is_pdf_col(c), F.greatest(est, F.lit(1)))
+        .otherwise(F.lit(1))
+        .cast("int")
+    )
+
+
+def _split_html(payload: bytes, k: int) -> Iterator[tuple]:
+    """→ (slice bytes, clean, first page, n_pages) per slice."""
+    from docling_jobkit_spark.extractor.extract import PAGE_BREAK
+
+    try:
+        payload.decode("utf-8", errors="strict")
+        clean = True
+    except UnicodeDecodeError:
+        clean = False
+    pages = payload.split(PAGE_BREAK)
+    n = len(pages)
+    for lo in range(0, n, k):
+        yield PAGE_BREAK.join(pages[lo : lo + k]), clean, lo + 1, n
+
+
+def _split_pdf(payload: bytes, k: int) -> Iterator[tuple]:
+    """→ (sub-PDF bytes, clean, first page, n_pages) per slice."""
+    from docling_jobkit_spark.extractor.pdf import pdf_page_count, split_pdf
+
+    try:
+        parts, n = split_pdf(payload, k)
+    except Exception:
+        # split failed (unparseable OR unserializable): degrade to one
+        # full-payload slice — its extraction row IS the single-shot row;
+        # count pages exactly so a slice that still extracts reports the
+        # single-shot n_pages
+        parts, n = [payload], pdf_page_count(payload)
+    for si, part in enumerate(parts):
+        # PDFs have no decode-partial state: always clean
+        yield part, True, si * k + 1, n
 
 
 def _split_batches(
     batches: Iterator[pd.DataFrame], pages_per_slice: int
 ) -> Iterator[pd.DataFrame]:
-    from docling_jobkit_spark.extractor.extract import PAGE_BREAK
-
-    k = pages_per_slice
-    for pdf in batches:
+    for batch in batches:
         out: dict[str, list] = {f.name: [] for f in SLICE_SCHEMA.fields}
-        for key, url, html in zip(pdf["_doc_key"], pdf["url"], pdf["html"]):
-            payload = bytes(html)
-            try:
-                payload.decode("utf-8", errors="strict")
-                clean = True
-            except UnicodeDecodeError:
-                clean = False
-            pages = payload.split(PAGE_BREAK)
-            n = len(pages)
-            n_slices = (n + k - 1) // k
-            for si in range(n_slices):
-                lo = si * k
-                hi = min(lo + k, n)
+        for key, url, raw, pdf_flag in zip(
+            batch["_doc_key"], batch["url"], batch["html"], batch["_is_pdf"]
+        ):
+            payload = bytes(raw)
+            split = _split_pdf if pdf_flag else _split_html
+            for si, (part, clean, lo, n) in enumerate(
+                split(payload, pages_per_slice), start=1
+            ):
                 out["_doc_key"].append(int(key))
                 out["url"].append(url)
-                out["slice_index"].append(si + 1)
-                out["slice_html"].append(PAGE_BREAK.join(pages[lo:hi]))
+                out["slice_index"].append(si)
+                out["slice_html"].append(part)  # shared payload column
+                out["is_pdf"].append(bool(pdf_flag))
                 out["clean"].append(clean)
-                out["page_lo"].append(lo + 1)
-                out["page_hi"].append(hi)
+                out["page_lo"].append(lo)
                 out["n_pages"].append(n)
                 out["n_bytes"].append(len(payload))
         yield pd.DataFrame(out)
 
 
-def split_slices(big_docs: DataFrame, pages_per_slice: int) -> DataFrame:
-    """(_doc_key, url, html) → one row per slice carrying ONLY its pages'
-    bytes. One Arrow round-trip of the payload total — per-slice rows sum
-    to ~the document size (plus dropped markers), so the downstream
-    shuffle and extraction never move whole-document bytes again."""
-    cols = big_docs.select("_doc_key", "url", "html")
+def _split_map(big_docs: DataFrame, pages_per_slice: int) -> DataFrame:
+    """(_doc_key, url, html, _is_pdf) → one SLICE_SCHEMA row per slice.
+    One Arrow round-trip of the payload total — per-slice rows sum to ~the
+    document size, so the downstream shuffle and extraction never move
+    whole-document bytes again. A pdf slice row carries the EXACT page
+    total from the split's own parse (the JVM routing estimate never
+    reaches output rows)."""
+    cols = big_docs.select("_doc_key", "url", "html", "_is_pdf")
     return cols.mapInPandas(
         lambda it: _split_batches(it, pages_per_slice), schema=SLICE_SCHEMA
     )
 
 
+def split_slices(big_docs: DataFrame, pages_per_slice: int) -> DataFrame:
+    """(_doc_key, url, html) → html slice rows (see ``_split_map``)."""
+    return _split_map(big_docs.withColumn("_is_pdf", F.lit(False)), pages_per_slice)
+
+
+def split_pdf_slices(big_docs: DataFrame, pages_per_slice: int) -> DataFrame:
+    """(_doc_key, url, pdf) → sub-PDF slice rows (see ``_split_map``)."""
+    flagged = big_docs.select(
+        "_doc_key", "url", F.col("pdf").alias("html"), F.lit(True).alias("_is_pdf")
+    )
+    return _split_map(flagged, pages_per_slice)
+
+
+def _extract_html_slice(payload: bytes, clean: bool, prof):
+    """→ (status, text, spans, error dict, timings) of one html slice."""
+    import time
+
+    from docling_jobkit_spark.extractor.errors import classify_failure
+    from docling_jobkit_spark.extractor.extract import extract_page_range
+
+    try:
+        t0 = time.perf_counter()
+        text, spans, _ = extract_page_range(payload, 1, 1 << 30, prof)
+        timings = {"extract": time.perf_counter() - t0}
+        return ("SUCCESS" if clean else "PARTIAL_SUCCESS"), text, spans, None, timings
+    except Exception as exc:
+        return "FAILURE", "", [], classify_failure(exc).as_dict(), {}
+
+
+def _extract_pdf_slice(payload: bytes, url, page_lo: int):
+    """→ (status, text, spans, error dict, timings) of one sub-PDF."""
+    from docling_jobkit_spark.extractor.extract import Span
+    from docling_jobkit_spark.extractor.pdf import extract_pdf
+
+    res = extract_pdf(payload, url)
+    spans = res.spans
+    if page_lo > 1:
+        # sub-PDF pages renumber from 1; shift the span-path page prefix
+        # back to document numbering so sliced == single-shot
+        shift = page_lo - 1
+        spans = [
+            Span(
+                s.start, s.end, s.kind,
+                _PAGE_PREFIX.sub(lambda m: f"p{int(m.group(1)) + shift}/", s.path),
+            )
+            for s in spans
+        ]
+    error = res.error.as_dict() if res.error else None
+    return res.status, res.text, spans, error, res.timings
+
+
 def _extract_slice_batches(
     batches: Iterator[pd.DataFrame], profile: str = "default"
 ) -> Iterator[pd.DataFrame]:
-    from docling_jobkit_spark.extractor.errors import classify_failure
-    from docling_jobkit_spark.extractor.extract import PROFILES, extract_page_range
+    from docling_jobkit_spark.extractor.extract import PROFILES
 
     prof = PROFILES[profile]
 
-    for pdf in batches:
+    for batch in batches:
         out: dict[str, list] = {f.name: [] for f in SLICE_RESULT_SCHEMA.fields}
-        for key, url, sidx, payload, clean, n_pages, n_bytes in zip(
-            pdf["_doc_key"], pdf["url"], pdf["slice_index"], pdf["slice_html"],
-            pdf["clean"], pdf["n_pages"], pdf["n_bytes"],
+        for key, url, sidx, payload, pdf_flag, clean, page_lo, n_pages, n_bytes in zip(
+            batch["_doc_key"], batch["url"], batch["slice_index"],
+            batch["slice_html"], batch["is_pdf"], batch["clean"],
+            batch["page_lo"], batch["n_pages"], batch["n_bytes"],
         ):
-            payload = bytes(payload)
-            try:
-                import time as _time
-
-                t0 = _time.perf_counter()
-                text, spans, _ = extract_page_range(payload, 1, 1 << 30, prof)
-                out["timings"].append({"extract": _time.perf_counter() - t0})
-                out["status"].append("SUCCESS" if clean else "PARTIAL_SUCCESS")
-                out["extracted_text"].append(text)
-                out["spans"].append(spans)  # Span NamedTuples → Arrow structs
-                out["error"].append(None)
-            except Exception as exc:
-                out["status"].append("FAILURE")
-                out["extracted_text"].append("")
-                out["spans"].append([])
-                out["error"].append(classify_failure(exc).as_dict())
-                out["timings"].append({})
+            if pdf_flag:
+                res = _extract_pdf_slice(bytes(payload), url, int(page_lo))
+            else:
+                res = _extract_html_slice(bytes(payload), bool(clean), prof)
+            status, text, spans, error, timings = res
             out["_doc_key"].append(int(key))
             out["url"].append(url)
             out["slice_index"].append(int(sidx))
+            out["status"].append(status)
+            out["extracted_text"].append(text)
+            out["spans"].append(spans)  # Span NamedTuples → Arrow structs
+            out["error"].append(error)
             out["n_pages"].append(int(n_pages))
             out["n_bytes"].append(int(n_bytes))
+            out["timings"].append(timings)
         yield pd.DataFrame(out)
 
 
 def extract_slices(slices: DataFrame, profile: str = "default") -> DataFrame:
-    """Per-slice extraction. Each slice row is self-contained (its own
-    pages' bytes + the carried doc-level clean flag / totals), so this map
-    runs wherever the repartition put the row."""
+    """Per-slice extraction, html and pdf slices alike (each row carries
+    its format flag). Each slice row is self-contained (its own pages'
+    bytes + the carried doc-level clean flag / totals), so this map runs
+    wherever the repartition put the row."""
     cols = slices.select(
-        "_doc_key", "url", "slice_index", "slice_html", "clean", "n_pages", "n_bytes"
+        "_doc_key", "url", "slice_index", "slice_html", "is_pdf", "clean",
+        "page_lo", "n_pages", "n_bytes",
     )
     return cols.mapInPandas(
         lambda it: _extract_slice_batches(it, profile), schema=SLICE_RESULT_SCHEMA
     )
+
+
+def extract_pdf_slices(slices: DataFrame) -> DataFrame:
+    """``extract_slices`` under the default profile (pdf slices ignore it)."""
+    return extract_slices(slices)
 
 
 def _reassemble_group(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -294,6 +408,67 @@ def spread_slices(slices: DataFrame, num_partitions: int | None = None) -> DataF
     )
 
 
+def extract_routed(
+    pages: DataFrame,
+    payload_format: str = "html",
+    pages_per_slice: int = 2,
+    slice_min_pages: int | None = 3,
+    max_bytes: int | None = None,
+    profile: str = "default",
+    slice_partitions: int | None = None,
+    spread_small: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """pages(url, html) → FULL_RESULT_SCHEMA rows, one per input row.
+
+    Docs whose JVM page estimate reaches ``slice_min_pages`` go through
+    split → ``spread_slices`` → slice-extract → reassemble; everything
+    else (including over-``max_bytes`` docs, which must receive the
+    POLICY FAILURE row the single-shot oracle produces) takes
+    ``spread_small`` (if given) into the direct map. ``slice_min_pages``
+    None routes every row to the direct map. Output schema identical
+    either way; values byte-identical by construction.
+
+    The estimate may be wrong in either direction because both mis-routes
+    are output-identical: an undercount sends a multi-page doc to the
+    direct map (the oracle itself); an overcount slices a document into
+    one slice or fails a PDF split, which degrades to a single
+    full-payload slice whose extraction row reassembles to the direct
+    row (FAILURE rows pin n_pages=1 on both paths).
+
+    DETERMINISM CONTRACT: ``_doc_key`` (unique per input ROW — urls may
+    repeat) is a monotonically_increasing_id over the big branch, stable
+    only when the input's row order is — true for scans and
+    createDataFrame, NOT for a post-shuffle DataFrame (fetch order varies
+    across recomputation and could remap keys under task retry). Pass
+    any shuffle as ``spread_small`` rather than applying it upstream."""
+    flagged = pages.select(
+        "url", "html", format_flag_col(payload_format).alias("_is_pdf")
+    )
+    spread = spread_small or (lambda df: df)
+    if slice_min_pages is None:
+        return extract_flagged(spread(flagged), max_bytes=max_bytes, profile=profile)
+    est = F.when(F.col("_is_pdf"), pdf_page_count_col("html")).otherwise(
+        page_count_col("html")
+    )
+    size_ok = (
+        F.lit(True) if max_bytes is None else (F.length("html") <= F.lit(max_bytes))
+    )
+    route_sliced = F.col("html").isNotNull() & (est >= slice_min_pages) & size_ok
+    direct = extract_flagged(
+        spread(flagged.filter(~route_sliced)), max_bytes=max_bytes, profile=profile
+    )
+    big = flagged.filter(route_sliced).withColumn(
+        "_doc_key", F.monotonically_increasing_id()
+    )
+    # spread one document's slices across tasks — hash of (_doc_key,
+    # slice_index) is uniform, and only slice-sized bytes move; identity
+    # is stamped over the FINAL reassembled rows, the same projection as
+    # the direct map's
+    slices = spread_slices(_split_map(big, pages_per_slice), slice_partitions)
+    sliced = reassemble_slices(extract_slices(slices, profile))
+    return direct.unionByName(with_document_identity(sliced))
+
+
 def extract_documents_sliced(
     pages: DataFrame,
     pages_per_slice: int = 2,
@@ -302,191 +477,11 @@ def extract_documents_sliced(
     profile: str = "default",
     slice_partitions: int | None = None,
 ) -> DataFrame:
-    """Route: multi-page docs above the slice threshold go through
-    split → repartition → slice-extract → reassemble; everything else
-    (including over-``max_bytes`` docs, which must receive the POLICY
-    FAILURE row the single-shot oracle produces) takes the direct map.
-    Output schema identical either way; values byte-identical by
-    construction."""
-    size_ok = (
-        F.lit(True) if max_bytes is None else (F.length("html") <= F.lit(max_bytes))
+    """``extract_routed`` over an all-html corpus."""
+    return extract_routed(
+        pages, "html", pages_per_slice, slice_min_pages,
+        max_bytes, profile, slice_partitions,
     )
-    counted = pages.withColumn("n_pages", page_count_col("html"))
-    if "_doc_key" in pages.columns:
-        # adopting a caller-provided key: it MUST be the long id this
-        # module's schemas expect, and unique per row (the pipeline's
-        # pre-shuffle monotonically_increasing_id). The underscore name
-        # makes accidental collision with user data unlikely; a wrong
-        # TYPE would otherwise surface as a task failure inside the
-        # splitter, violating the failures-are-rows invariant.
-        dtype = dict(
-            (f.name, f.dataType) for f in pages.schema.fields
-        )["_doc_key"]
-        if not isinstance(dtype, T.LongType):
-            raise ValueError(
-                f"_doc_key column must be LongType (unique per row), got {dtype}"
-            )
-    else:
-        # Unique per input ROW (urls may repeat); assigned before the
-        # branch so slice rows inherit it through every shuffle.
-        # DETERMINISM CONTRACT: monotonically_increasing_id is stable only
-        # when the input's row order is — true for scans/createDataFrame,
-        # NOT for a post-shuffle DataFrame (fetch order varies across
-        # recomputation, which could remap keys under task retry).
-        # Callers that shuffle first must assign _doc_key themselves
-        # upstream of the shuffle (ExtractionPipeline does exactly this).
-        counted = counted.withColumn("_doc_key", F.monotonically_increasing_id())
-    route_sliced = (
-        F.col("html").isNotNull()
-        & (F.col("n_pages") >= F.lit(slice_min_pages))
-        & size_ok
-    )
-    big = counted.filter(route_sliced)
-    small = counted.filter(~route_sliced).drop("n_pages", "_doc_key")
-
-    direct = extract_documents(small, max_bytes=max_bytes, profile=profile)
-    # spread one document's slices across tasks — hash of (_doc_key,
-    # slice_index) is uniform, and only slice-sized bytes move
-    slices = spread_slices(split_slices(big, pages_per_slice), slice_partitions)
-    # identity stamped over the FINAL reassembled rows — same projection
-    # as the direct branch (inside extract_documents), identical values
-    # by construction
-    sliced = with_document_identity(reassemble_slices(extract_slices(slices, profile)))
-    return direct.unionByName(sliced)
-
-
-# ---------------------------------------------------------------------------
-# PDF slice fan-out — the same F1/F2 machinery over real page splits
-# (extractor/pdf.py::split_pdf builds self-contained sub-PDFs, so slice
-# rows ship slice-sized bytes exactly like the HTML path; reference:
-# single-PDF slice plan ``serve_deployment.py:437-464``)
-# ---------------------------------------------------------------------------
-def _occurrences(s: Column, needle: str) -> Column:
-    """Non-overlapping substring count as a length difference (the
-    page_count_col technique: replace-and-measure, no per-page substring
-    materialization, pure codegen)."""
-    return (
-        F.length(s) - F.length(F.replace(s, F.lit(needle), F.lit("")))
-    ) / F.lit(len(needle))
-
-
-def pdf_page_count_col(payload_col="pdf") -> Column:
-    """JVM-side PDF page-count ESTIMATE for slice routing: occurrences of
-    the page-leaf marker ``/Type /Page`` (both spacings) minus the
-    ``/Type /Pages`` tree nodes the shorter needle also matches, over the
-    unchecked binary→string wrap. Payloads missing the ``%PDF-`` magic
-    estimate 1 (single-shot admission handles them). Counting bytes this
-    way can miss pages (object-stream PDFs) or over-count (the marker
-    inside compressed data) — both mis-routes are output-identical, see
-    ``extract_pdf_documents_sliced``; exact counting stays in the Python
-    ``pdf_page_count`` used by the splitter itself."""
-    c = F.col(payload_col) if isinstance(payload_col, str) else payload_col
-    s = c.cast("string")
-    est = (
-        _occurrences(s, "/Type /Page")
-        - _occurrences(s, "/Type /Pages")
-        + _occurrences(s, "/Type/Page")
-        - _occurrences(s, "/Type/Pages")
-    )
-    looks_pdf = F.instr(F.substring(s, 1, 1100), "%PDF-") > 0
-    return (
-        F.when(c.isNull() | ~looks_pdf, F.lit(1))
-        .otherwise(F.greatest(est, F.lit(1)))
-        .cast("int")
-    )
-
-
-def _split_pdf_batches(
-    batches: Iterator[pd.DataFrame], pages_per_slice: int
-) -> Iterator[pd.DataFrame]:
-    from docling_jobkit_spark.extractor.pdf import pdf_page_count, split_pdf
-
-    for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in SLICE_SCHEMA.fields}
-        for key, url, payload in zip(pdf["_doc_key"], pdf["url"], pdf["pdf"]):
-            payload = bytes(payload)
-            try:
-                parts, doc_pages = split_pdf(payload, pages_per_slice)
-            except Exception:
-                # split failed (unparseable OR unserializable): degrade to
-                # one full-payload slice — its extraction row IS the
-                # single-shot row; count pages exactly so a slice that
-                # still extracts reports the single-shot n_pages
-                parts, doc_pages = [payload], pdf_page_count(payload)
-            for si, part in enumerate(parts):
-                out["_doc_key"].append(int(key))
-                out["url"].append(url)
-                out["slice_index"].append(si + 1)
-                out["slice_html"].append(part)  # schema-shared payload column
-                out["clean"].append(True)  # PDFs have no decode-partial state
-                out["page_lo"].append(si * pages_per_slice + 1)
-                out["page_hi"].append(
-                    min((si + 1) * pages_per_slice, int(doc_pages))
-                )
-                out["n_pages"].append(int(doc_pages))
-                out["n_bytes"].append(len(payload))
-        yield pd.DataFrame(out)
-
-
-def split_pdf_slices(big_docs: DataFrame, pages_per_slice: int) -> DataFrame:
-    """(_doc_key, url, pdf) → one SLICE_SCHEMA row per sub-PDF; the
-    carried ``n_pages`` is the EXACT total from the split's own parse
-    (the JVM routing estimate never reaches output rows). The payload
-    column keeps the schema's ``slice_html`` name so the spread /
-    reassembly stages are shared verbatim with the HTML path."""
-    cols = big_docs.select("_doc_key", "url", F.col("pdf"))
-    return cols.mapInPandas(
-        lambda it: _split_pdf_batches(it, pages_per_slice), schema=SLICE_SCHEMA
-    )
-
-
-def _extract_pdf_slice_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    import re
-
-    from docling_jobkit_spark.extractor.extract import Span
-    from docling_jobkit_spark.extractor.pdf import extract_pdf
-
-    page_re = re.compile(r"^p(\d+)/")
-
-    for pdf in batches:
-        out: dict[str, list] = {f.name: [] for f in SLICE_RESULT_SCHEMA.fields}
-        for key, url, sidx, payload, page_lo, n_pages, n_bytes in zip(
-            pdf["_doc_key"], pdf["url"], pdf["slice_index"], pdf["slice_html"],
-            pdf["page_lo"], pdf["n_pages"], pdf["n_bytes"],
-        ):
-            res = extract_pdf(bytes(payload), url)
-            spans = res.spans
-            if int(page_lo) > 1:
-                # sub-PDF pages renumber from 1; shift the span-path page
-                # prefix back to document numbering so sliced == single-shot
-                shift = int(page_lo) - 1
-                spans = [
-                    Span(
-                        s.start, s.end, s.kind,
-                        page_re.sub(lambda m: f"p{int(m.group(1)) + shift}/", s.path),
-                    )
-                    for s in spans
-                ]
-            out["_doc_key"].append(int(key))
-            out["url"].append(url)
-            out["slice_index"].append(int(sidx))
-            out["status"].append(res.status)
-            out["extracted_text"].append(res.text)
-            out["spans"].append(spans)
-            out["error"].append(res.error.as_dict() if res.error else None)
-            out["n_pages"].append(int(n_pages))
-            out["n_bytes"].append(int(n_bytes))
-            out["timings"].append(res.timings)
-        yield pd.DataFrame(out)
-
-
-def extract_pdf_slices(slices: DataFrame) -> DataFrame:
-    cols = slices.select(
-        "_doc_key", "url", "slice_index", "slice_html", "page_lo", "n_pages", "n_bytes"
-    )
-    return cols.mapInPandas(_extract_pdf_slice_batches, schema=SLICE_RESULT_SCHEMA)
 
 
 def extract_pdf_documents_sliced(
@@ -497,40 +492,10 @@ def extract_pdf_documents_sliced(
     payload_col: str = "pdf",
     slice_partitions: int | None = None,
 ) -> DataFrame:
-    """PDF twin of ``extract_documents_sliced``: multi-page PDFs above the
-    threshold split into self-contained sub-PDFs, spread across tasks,
-    extracted per slice, reassembled in slice order — byte-identical to
-    the single-shot path because PDF layout analysis is per-page and a
-    sub-PDF carries exactly its pages' object closure.
-
-    ROUTING is a pure-JVM structural estimate (``pdf_page_count_col``),
-    not a Python parse: at corpus scale an admission-path pandas UDF
-    would pay a full object scan per document just to pick a branch.
-    The estimate is allowed to be wrong in either direction because both
-    mis-routes are output-identical: an undercount sends a multi-page
-    doc to the single-shot map (the oracle itself); an overcount slices
-    a document into one slice or fails the split, which degrades to a
-    single full-payload slice whose extraction row reassembles to the
-    single-shot row (FAILURE rows pin n_pages=1 on both paths)."""
-    from docling_jobkit_spark.operators.extract_op import extract_pdf_documents
-
-    renamed = pages.withColumnRenamed(payload_col, "pdf")
-    size_ok = (
-        F.lit(True) if max_bytes is None else (F.length("pdf") <= F.lit(max_bytes))
+    """``extract_routed`` over an all-pdf corpus (payload in
+    ``payload_col``)."""
+    return extract_routed(
+        pages.select("url", F.col(payload_col).alias("html")), "pdf",
+        pages_per_slice, slice_min_pages, max_bytes,
+        slice_partitions=slice_partitions,
     )
-    counted = renamed.withColumn("n_pages", pdf_page_count_col("pdf"))
-    if "_doc_key" not in counted.columns:
-        # same determinism contract as the HTML router (see above)
-        counted = counted.withColumn("_doc_key", F.monotonically_increasing_id())
-    route_sliced = (
-        F.col("pdf").isNotNull()
-        & (F.col("n_pages") >= F.lit(slice_min_pages))
-        & size_ok
-    )
-    big = counted.filter(route_sliced)
-    small = counted.filter(~route_sliced).drop("n_pages", "_doc_key")
-
-    direct = extract_pdf_documents(small, max_bytes=max_bytes)
-    slices = spread_slices(split_pdf_slices(big, pages_per_slice), slice_partitions)
-    sliced = with_document_identity(reassemble_slices(extract_pdf_slices(slices)))
-    return direct.unionByName(sliced)

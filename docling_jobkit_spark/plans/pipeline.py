@@ -2,32 +2,34 @@
 
 The whole engine, declaratively:
 
-    scan → admission filter → salted repartition → slice-explode big docs
-    → mapInPandas(extract) → reassemble → union failure rows
-    → results + metrics tables, committed per group, resumable.
+    scan → admission filter → JVM route on (format flag, page estimate)
+    → small docs: salted repartition → mapInPandas(extract)
+    → big docs: split → spread slices → mapInPandas(extract) → reassemble
+    → union failure rows → results + metrics tables, committed per group,
+    resumable.
 
 Reference lifecycle being replaced (SURVEY §3.2, the multiproc CLI):
 source iteration → DocumentChunk batching → mp.Pool(process_batch) →
 BatchResult aggregation. Spark's scheduler plays the pool; commit groups
 play the durable task state.
 
-Scan multiplicity at scale (deliberate tradeoff, quantified):
-- admission_split's admitted/rejected branches and the slice router's
-  big/small branches are FILTERS of the same scan, so one commit group
-  evaluates the (column-pruned: url+html) source up to 4×, and the run
-  loop does that once per group. Filters-as-branches is what keeps
-  failures as relational rows and admission ahead of the UDF; the
-  alternatives are worse at 100 TB: persist() of the group slice
-  duplicates a corpus-scale payload to executor storage, and routing
-  inside the UDF forfeits scan-level pushdown of the gates.
-- Mitigations that make the re-scans cheap in production: (1) lay the
-  pages table out partitioned by the url-hash bucket — the commit-group
-  predicate (a pmod of that bucket) then PRUNES partitions, so each
-  group scans only its 1/n_commit_groups slice; (2) single-page corpora
-  should run use_slicing=False (the bench does), which removes the
-  big/small branch entirely; (3) the admission gates are cheap codegen
-  predicates over bytes the extractor must read anyway — the marginal
-  cost is I/O, not CPU, and column pruning keeps it to url+html.
+One routing pass per commit group (operators/slices.py::extract_routed):
+admission_split's admitted/rejected branches and the router's big/small
+branches are FILTERS of the same scan, so one group evaluates the
+(column-pruned: url+html) source 3× — small, big, rejected — and the run
+loop does that once per group. Only the small docs cross the salted
+payload shuffle; big docs are split where the scan put them and only
+slice bytes shuffle. Filters-as-branches is what keeps failures as
+relational rows and admission ahead of the UDF; the alternatives are
+worse at 100 TB: persist() of the group slice duplicates a corpus-scale
+payload to executor storage, and routing inside the UDF forfeits
+scan-level pushdown of the gates. To make the re-scans cheap in
+production, lay the pages table out partitioned by the url-hash bucket:
+the commit-group predicate (a pmod of that bucket) then PRUNES
+partitions, so each group scans only its 1/n_commit_groups slice. The
+admission gates are cheap codegen predicates over bytes the extractor
+must read anyway — the marginal cost is I/O, not CPU, and column
+pruning keeps it to url+html.
 """
 
 from __future__ import annotations
@@ -44,19 +46,11 @@ from docling_jobkit_spark.metrics import (
     with_lineage,
 )
 from docling_jobkit_spark.operators.admission import admission_split
-from docling_jobkit_spark.operators.extract_op import (
-    extract_documents,
-    extract_documents_auto,
-    extract_pdf_documents,
-)
 from docling_jobkit_spark.operators.partitioning import (
     salted_repartition,
     url_bucket_col,
 )
-from docling_jobkit_spark.operators.slices import (
-    extract_documents_sliced,
-    extract_pdf_documents_sliced,
-)
+from docling_jobkit_spark.operators.slices import extract_routed
 
 
 @dataclass
@@ -109,66 +103,20 @@ class ExtractionPipeline:
         admitted, rejected = admission_split(
             pages, max_bytes=cfg.max_bytes, max_pages=cfg.max_pages
         )
-        if cfg.use_slicing:
-            # assign the slice-reassembly identity BEFORE any shuffle:
-            # monotonically_increasing_id over the (deterministic) scan
-            # order survives task recomputation; assigning it after the
-            # salted repartition would tie keys to shuffle fetch order
-            # and could remap rows under retry (slices.py contract)
-            admitted = admitted.withColumn(
-                "_doc_key", F.monotonically_increasing_id()
-            )
-        if cfg.repartition:
-            admitted = salted_repartition(admitted, cfg.num_partitions, cfg.n_buckets)
-        extracted = self._extract_routed(admitted)
-        return extracted.unionByName(rejected)
-
-    def _extract_routed(self, admitted: DataFrame) -> DataFrame:
-        """Format routing × slice routing. For "auto", the corpus splits
-        on a pure-JVM magic sniff and each side takes its own slice
-        fan-out; both sides adopt the pre-assigned ``_doc_key``, so
-        reassembly identity survives the split."""
-        cfg = self.config
-        fmt = cfg.payload_format
-        if fmt == "html":
-            if cfg.use_slicing:
-                return extract_documents_sliced(
-                    admitted,
-                    pages_per_slice=cfg.pages_per_slice,
-                    slice_min_pages=cfg.slice_min_pages,
-                    profile=cfg.profile,
-                )
-            return extract_documents(admitted, profile=cfg.profile)
-        if fmt == "pdf":
-            if cfg.use_slicing:
-                return extract_pdf_documents_sliced(
-                    admitted,
-                    pages_per_slice=cfg.pages_per_slice,
-                    slice_min_pages=cfg.slice_min_pages,
-                    payload_col="html",
-                )
-            return extract_pdf_documents(admitted, payload_col="html")
-        if fmt != "auto":
-            raise ValueError(f"payload_format must be html|pdf|auto, got {fmt!r}")
-        if not cfg.use_slicing:
-            return extract_documents_auto(admitted, profile=cfg.profile)
-        c = F.col("html").cast("string")
-        looks_pdf = F.col("html").isNotNull() & (
-            F.instr(F.substring(c, 1, 1100), "%PDF-") > 0
+        spread_small = (
+            (lambda df: salted_repartition(df, cfg.num_partitions, cfg.n_buckets))
+            if cfg.repartition
+            else None
         )
-        html_side = extract_documents_sliced(
-            admitted.filter(~looks_pdf),
+        extracted = extract_routed(
+            admitted,
+            cfg.payload_format,
             pages_per_slice=cfg.pages_per_slice,
-            slice_min_pages=cfg.slice_min_pages,
+            slice_min_pages=cfg.slice_min_pages if cfg.use_slicing else None,
             profile=cfg.profile,
+            spread_small=spread_small,
         )
-        pdf_side = extract_pdf_documents_sliced(
-            admitted.filter(looks_pdf),
-            pages_per_slice=cfg.pages_per_slice,
-            slice_min_pages=cfg.slice_min_pages,
-            payload_col="html",
-        )
-        return html_side.unionByName(pdf_side)
+        return extracted.unionByName(rejected)
 
     # -- resumable run -------------------------------------------------
 

@@ -386,6 +386,39 @@ def test_spark_pdf_sliced_matches_single_shot(spark):
     assert got == want
 
 
+@pytest.mark.parametrize(
+    "prefix", [b"x" * 1050, b"\xe2"], ids=["junk-1050", "utf8-lead-byte"]
+)
+def test_routing_sniff_agrees_with_is_pdf(spark, prefix):
+    """The JVM routing sniff reads the same first 1024 BYTES as
+    ``pdf.is_pdf``: a PDF behind 1050 junk bytes is html to both, a PDF
+    behind a stray UTF-8 lead byte is a PDF to both. So the sliced and
+    unsliced pipelines and the auto map return one and the same row."""
+    from docling_jobkit_spark.extractor.extract import extract
+    from docling_jobkit_spark.operators.extract_op import extract_documents_auto
+    from docling_jobkit_spark.plans.pipeline import ExtractionPipeline, PipelineConfig
+
+    payload = prefix + g.build_pdf(_threepage_spec(), compress=True)
+    df = spark.createDataFrame(
+        pd.DataFrame([("u://p", payload)], columns=["url", "html"]),
+        schema="url string, html binary",
+    )
+
+    def one_row(results):
+        (row,) = results.drop("timings").collect()
+        return row
+
+    want = one_row(extract_documents_auto(df))
+    oracle = (extract_pdf if pdf.is_pdf(payload) else extract)(payload, "u://p")
+    assert (want["status"], want["extracted_text"]) == (oracle.status, oracle.text)
+    for use_slicing in (True, False):
+        pipe = ExtractionPipeline(
+            spark,
+            PipelineConfig(num_partitions=2, payload_format="auto", use_slicing=use_slicing),
+        )
+        assert one_row(pipe.extract(df)) == want, use_slicing
+
+
 def test_warc_pdf_mixed_corpus_composes_with_auto_router(spark, tmp_path):
     """Common-Crawl shape: a .warc.gz shard holding BOTH html and pdf
     response payloads scans through read_warc and converts in one pass

@@ -129,7 +129,7 @@ def test_dedup_families_never_plan_quadratic_joins(spark, sf_dir):
 
 def test_commit_group_scan_multiplicity_bounded(spark, pages_path):
     """plans/pipeline.py documents a deliberate tradeoff: one commit
-    group's plan evaluates the (column-pruned) source up to 4× — the
+    group's plan evaluates the (column-pruned) source 3× — the
     admitted/rejected and big/small branches are filters of one scan.
     Pin the bound so a refactor can't silently multiply scans."""
     from pyspark.sql import functions as F
@@ -145,14 +145,58 @@ def test_commit_group_scan_multiplicity_bounded(spark, pages_path):
     group = pages.filter(F.col("commit_group") == 0).drop("commit_group")
     plan = _plan(pipe.extract(group))
     n_scans = plan.count("Scan parquet")
-    assert 1 <= n_scans <= 4, f"commit-group plan has {n_scans} parquet scans"
+    assert 1 <= n_scans <= 3, f"commit-group plan has {n_scans} parquet scans"
+
+
+def _subtree(lines: list[str], i: int) -> list[str]:
+    """The plan lines below the node on line ``i`` (its descendants)."""
+
+    def col(ln):
+        return len(re.match(r"[ :|+\-]*", ln).group(0))
+
+    out = []
+    for ln in lines[i + 1 :]:
+        if col(ln) <= col(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+def test_auto_commit_group_routes_in_one_pass(spark, pages_path):
+    """A payload_format="auto" commit group plans ONE router
+    (slices.extract_routed) for html and pdf alike: the full payload
+    crosses exactly one shuffle — the salted spread below the direct map
+    — big docs split on the scan side, and the fan-out adds one split
+    map, one slice-extract map and one reassembly."""
+    from docling_jobkit_spark.plans.pipeline import ExtractionPipeline, PipelineConfig
+
+    pipe = ExtractionPipeline(
+        spark,
+        PipelineConfig(num_partitions=8, n_commit_groups=4, payload_format="auto"),
+    )
+    pages = spark.read.parquet(pages_path).withColumn(
+        "commit_group", pipe.group_col()
+    )
+    group = pages.filter(F.col("commit_group") == 0).drop("commit_group")
+    lines = _plan(pipe.extract(group)).splitlines()
+    direct = [
+        i for i, ln in enumerate(lines)
+        if re.search(r"MapInPandas <lambda>\(url#\d+, html#\d+, _is_pdf#\d+\)", ln)
+    ]
+    assert len(direct) == 1, lines
+    exchanges = [ln for ln in _subtree(lines, direct[0]) if "Exchange" in ln]
+    assert len(exchanges) == 1 and "sha2(" in exchanges[0], exchanges
+    plan = "\n".join(lines)
+    assert plan.count("Scan parquet") <= 3
+    assert plan.count("MapInPandas") <= 3
+    assert plan.count("FlatMapGroupsInPandas") == 1
 
 
 def test_commit_group_predicate_prunes_bucket_partitioned_layout(spark, pages_path, tmp_path):
     """The documented mitigation: lay the pages table out partitioned by
     the commit group and each group's predicate PRUNES partitions — every
     parquet scan in the group's plan carries the PartitionFilters, so the
-    4× re-evaluation touches 1/n_commit_groups of the data, not 4× all
+    3× re-evaluation touches 1/n_commit_groups of the data, not 3× all
     of it."""
     from pyspark.sql import functions as F
 

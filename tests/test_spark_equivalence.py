@@ -89,3 +89,71 @@ def test_column_pruning_reaches_scan(spark, pages_path):
     schema = m.group(1)
     assert "url" in schema and "html" in schema
     assert "warc_ts" not in schema and "lang" not in schema
+
+
+def test_routes_byte_identical_on_mixed_corpus(spark, corpus_rows):
+    """One auto-format crawl through every route — sliced pipeline,
+    unsliced pipeline, single-shot auto map — gives the same rows, column
+    for column (timings are wall-clock, not content), and each row equals
+    the per-row Python oracle. The corpus covers multi-page html and pdf,
+    duplicate urls with distinct payloads, malformed html and pdf (the
+    pdf's page estimate sends it to a split that fails and degrades), an
+    empty doc, and over-``max_bytes`` docs of both formats."""
+    from docling_jobkit_spark.extractor import pdf_gen as g
+    from docling_jobkit_spark.extractor.pdf import extract_pdf, is_pdf
+    from docling_jobkit_spark.operators.extract_op import extract_documents_auto
+
+    brk = b"<!--PAGE_BREAK-->"
+    paged = [r["html"] for r in corpus_rows if r["html"] and r["html"].count(brk) >= 2]
+
+    def pdf_of(n, compress):
+        return g.build_pdf(
+            [g.Page.of([g.para(f"page {i} body text of a pdf document")]) for i in range(n)],
+            compress=compress,
+        )
+
+    pdf3, pdf4 = pdf_of(3, True), pdf_of(4, False)
+    bad_html = brk.join([b"<p>caf\xe9 au lait, a malformed page of text</p>"] * 3)
+    bad_pdf = b"%PDF-1.4 garbage /Type /Page /Type /Page /Type /Page"
+    docs = [
+        ("h://paged", paged[0]), ("dup://h", paged[0]), ("dup://h", paged[1]),
+        ("p://multi", pdf3), ("dup://p", pdf3), ("dup://p", pdf4),
+        ("h://bad", bad_html), ("p://bad", bad_pdf), ("h://empty", b""),
+    ]
+    cap = max(len(p) for _, p in docs) + 1
+    docs += [
+        ("h://huge", paged[0] + brk + b"<p>" + b"x" * cap + b"</p>"),
+        ("p://huge", pdf3 + b"\n%" + b"x" * cap),
+    ]
+    df = spark.createDataFrame(docs, "url string, html binary")
+
+    def rows(results):
+        return sorted((tuple(r) for r in results.drop("timings").collect()), key=repr)
+
+    def pipe(use_slicing):
+        cfg = PipelineConfig(
+            num_partitions=4, max_bytes=cap, payload_format="auto",
+            pages_per_slice=1, use_slicing=use_slicing,
+        )
+        return ExtractionPipeline(spark, cfg).extract(df)
+
+    sliced = rows(pipe(True))
+    assert sliced == rows(pipe(False))
+    assert sliced == rows(extract_documents_auto(df, max_bytes=cap))
+
+    def fields(url, status, text, spans, error, n_pages, n_bytes):
+        return (url, status, text, [tuple(s) for s in spans],
+                tuple(error) if error else None, n_pages, n_bytes)
+
+    got = sorted((fields(*r[:7]) for r in sliced), key=repr)
+    want = []
+    for url, payload in docs:
+        res = (extract_pdf if is_pdf(payload) else extract)(payload, url, max_bytes=cap)
+        err = res.error.as_dict() if res.error else None
+        want.append(fields(
+            url, res.status, res.text, res.spans,
+            tuple(err.values()) if err else None, res.n_pages, len(payload),
+        ))
+    assert got == sorted(want, key=repr)
+    assert {r[1] for r in got} == {"SUCCESS", "PARTIAL_SUCCESS", "FAILURE"}
+    assert {r[0]: r[5] for r in got}["p://multi"] == 3
