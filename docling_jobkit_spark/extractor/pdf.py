@@ -1019,12 +1019,6 @@ class PdfBlock(NamedTuple):
     path: str
 
 
-def _est_width(size: int, text: str) -> int:
-    """Fallback width model (pdf_gen's contract); layout normally uses
-    the interpreter-computed ``Run.w``."""
-    return (size * CHAR_ADVANCE_PCT * len(text)) // 100
-
-
 def _lines_from_runs(runs: list[Run]) -> list[_Line]:
     ordered = sorted(runs, key=lambda r: (-r.y, r.x))
     lines: list[list[Run]] = []

@@ -576,24 +576,6 @@ def with_minhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return spread_for_compute(df).withColumn("minhash", minhash_signature(text_col))
 
 
-def lsh_candidates(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Candidate near-dup pairs via LSH banding: equal band-slice of the
-    signature → same bucket → pair. Returns distinct (id_a, id_b)."""
-    sh = _materialize(
-        spread_for_compute(df, key=id_col).select(
-            F.col(id_col).alias("id"), word_shingles(text_col).alias("sh")
-        )
-    ).filter(F.size("sh") > 0)  # empty-set guard, see minhash_near_duplicates
-    # Generate barrier — see minhash_near_duplicates
-    sig = sh.select(
-        "id",
-        F.explode(F.array(minhash_signature_from_shingles("sh"))).alias("sig"),
-    )
-    return _band_candidates(sig)
-
-
 def _band_candidates(sig: DataFrame) -> DataFrame:
     """(id, sig) → distinct candidate pairs sharing any band bucket."""
     bands = sig.select(

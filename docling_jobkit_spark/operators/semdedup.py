@@ -90,7 +90,7 @@ def with_semdedup_rank(
     sp = spread_for_compute(df)
     out_cols = sp.columns
     inner = sp.select(
-        "*", F.explode(F.array(_cosine_array(sp, centroids, vec_col))).alias("_ca")
+        "*", F.explode(F.array(_cosine_array(centroids, vec_col))).alias("_ca")
     )
     cell = F.coalesce(
         (F.array_position(F.col("_ca"), F.array_max(F.col("_ca"))) - 1).cast(

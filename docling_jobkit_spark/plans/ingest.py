@@ -57,6 +57,17 @@ the index is never shuffled (minhash_index steady-state plan) and the
 seen table is never shuffled (broadcast hash semi-join). Stage stamps
 and dedup joins move (id, hash)-narrow rows only; document text
 crosses the wire exactly once, into the commit writes.
+
+Mutation seam: every lifecycle verb changes the state directory
+through three private helpers — ``_delete`` (the module's only file
+or directory delete; idempotent, returns the bytes reclaimed),
+``_drop_manifest_rows`` (both pruning manifests forget the files a
+predicate names) and ``_reconcile_manifests`` (both manifests re-sync
+with the corpus files after a rewrite). Beside them, only Spark
+writers touch the state: ``ingest_batch``'s commit and the two-phase
+copies of compaction and takedown. One ordering rule holds everywhere:
+the manifests drop their rows BEFORE any file they name is deleted,
+so a pruned scan never references a deleted file.
 """
 
 from __future__ import annotations
@@ -64,7 +75,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from docling_jobkit_spark.functions.scalar import content_hash, stable_hash64
@@ -102,6 +113,10 @@ HISTORY_STAGES = ("history_exact", "history_fuzzy")
 INGEST_STAGES = STAGES + HISTORY_STAGES
 
 _BATCH_ID_RE = re.compile(r"^[A-Za-z0-9._-]+$")
+# per-batch families (``<family>/batch=<id>``), and the two-phase tmps
+# that compaction and takedown stage a certified copy in
+_FAMILIES = ("corpus", "seen", "index", "shards", "ledger")
+_TMP_FAMILIES = ("corpus_compact", "corpus_takedown", "shards_takedown")
 
 # Explicit read schemas: an all-dropped batch commits EMPTY dirs
 # (marker only, no part files) and schema inference would fail there.
@@ -119,7 +134,6 @@ LEDGER_SCHEMA = (
 class IngestConfig:
     curation: CurationConfig = field(default_factory=CurationConfig)
     tau: float = 0.8  # fuzzy threshold vs history (est. Jaccard)
-    broadcast_delta: bool = True  # steady state: delta ≪ history
     zonemap_cols: tuple[str, ...] = ("n_chars",)
     # file-level Bloom index over the corpus (point lookups: audits /
     # takedown "which files hold this doc" — zone maps can't prune a
@@ -168,23 +182,105 @@ def _exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def _committed_batch_dirs(spark: SparkSession, family_root: str) -> dict[str, str]:
-    """{batch_id: dir} for ``family_root/batch=<id>`` dirs whose own
-    ``_SUCCESS`` exists — a torn write (no committer marker) is
-    invisible to history probes. One driver-side LIST (object-store
+def _batch_dirs(
+    spark: SparkSession, family_root: str
+) -> list[tuple[str, object, bool]]:
+    """(batch_id, FileStatus, has own ``_SUCCESS``) for every
+    ``family_root/batch=<id>`` dir. One driver-side LIST (object-store
     safe, no rename assumptions), metadata-scale."""
     fs, jroot = _fs(spark, family_root)
     if not fs.exists(jroot):
-        return {}
+        return []
     jvm = spark.sparkContext._jvm
-    out: dict[str, str] = {}
-    for st in fs.listStatus(jroot):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch="):
-            marker = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if fs.exists(marker):
-                out[name[len("batch="):]] = st.getPath().toString()
-    return out
+    return [
+        (
+            st.getPath().getName()[len("batch="):],
+            st,
+            bool(fs.exists(jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS"))),
+        )
+        for st in fs.listStatus(jroot)
+        if st.isDirectory() and st.getPath().getName().startswith("batch=")
+    ]
+
+
+def _committed_batch_dirs(spark: SparkSession, family_root: str) -> dict[str, str]:
+    """{batch_id: dir} for ``family_root/batch=<id>`` dirs whose own
+    ``_SUCCESS`` exists — a torn write (no committer marker) is
+    invisible to history probes."""
+    return {
+        bid: st.getPath().toString()
+        for bid, st, done in _batch_dirs(spark, family_root)
+        if done
+    }
+
+
+def _batch_root(state_dir: str, batch_id: str) -> str:
+    """The state root for a per-batch verb; the id becomes a path
+    segment, so it is validated first."""
+    if not _BATCH_ID_RE.match(batch_id):
+        raise ValueError(
+            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
+        )
+    return state_dir.rstrip("/")
+
+
+def _require_committed(
+    spark: SparkSession, root: str, batch_id: str, verb: str
+) -> None:
+    """Maintenance verbs touch committed batches only — acting on an
+    in-flight batch would race its writer."""
+    if not _exists(spark, f"{root}/ledger/batch={batch_id}/_SUCCESS"):
+        raise ValueError(f"batch {batch_id!r} is not committed; refusing to {verb}")
+
+
+def _delete(spark: SparkSession, path: str) -> int:
+    """Recursive, idempotent delete (an absent path is a no-op) — the
+    module's only filesystem delete. Returns the bytes reclaimed."""
+    fs, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
+        return 0
+    n_bytes = int(fs.getContentSummary(jpath).getLength())
+    fs.delete(jpath, True)
+    return n_bytes
+
+
+def _drop_manifest_rows(spark: SparkSession, root: str, gone: Column) -> None:
+    """Both pruning manifests drop the rows whose ``file`` matches the
+    ``gone`` predicate. Callers run this BEFORE deleting those files:
+    ``scan_pruned`` / ``scan_pruned_bloom`` read survivors by explicit
+    manifest path, so the reverse order leaves a window where a pruned
+    scan references deleted payload. A no-op (no write) once the rows
+    are gone. Metadata-sized."""
+    for path, read, write in (
+        (f"{root}/zonemap", read_zonemap, write_zonemap),
+        (f"{root}/bloomidx", read_bloom_index, write_bloom_index),
+    ):
+        if _exists(spark, f"{path}/_SUCCESS"):
+            manifest = read(spark, path)
+            keep = manifest.where(~gone)
+            if keep.count() < manifest.count():
+                write(keep.localCheckpoint(eager=True), path)
+
+
+def _reconcile_manifests(spark: SparkSession, root: str) -> None:
+    """Incremental reconciliation after a layout change: stale rows
+    drop, unseen files get footer-statted (O(new files)). Indexed
+    columns are read off each manifest itself, so a rewrite can't
+    silently change coverage; a manifest emptied by earlier drops falls
+    back to the ``IngestConfig`` default columns."""
+    for path, read, update, write, col_field, default in (
+        (f"{root}/zonemap", read_zonemap, update_zonemap, write_zonemap,
+         "col", IngestConfig.zonemap_cols),
+        (f"{root}/bloomidx", read_bloom_index, update_bloom_index,
+         write_bloom_index, "column", IngestConfig.bloom_cols),
+    ):
+        if _exists(spark, f"{path}/_SUCCESS"):
+            prev = read(spark, path)
+            cols = sorted(
+                r[0] for r in prev.select(col_field).distinct().collect()
+            ) or list(default)
+            merged, _n_new, _n_drop = update(spark, f"{root}/corpus", prev, cols)
+            write(merged.localCheckpoint(eager=True), path)
 
 
 def _empty_corpus(spark: SparkSession) -> DataFrame:
@@ -206,17 +302,15 @@ def _has_data_files(spark: SparkSession, path: str) -> bool:
     return False
 
 
-def history_exact_hits(
-    hist_hashes: DataFrame, delta_hashes: DataFrame, broadcast_delta: bool = True
-) -> DataFrame:
+def history_exact_hits(hist_hashes: DataFrame, delta_hashes: DataFrame) -> DataFrame:
     """Delta rows whose content_hash is already committed. The history
     side (years of hashes) streams MAP-SIDE against the broadcast
     delta — the seen table, like the MinHash index, is never shuffled
     (plan-pinned in tests/test_ingest.py). ``delta_hashes`` carries
     (id, content_hash); the id column rides through."""
-    if broadcast_delta:
-        delta_hashes = F.broadcast(delta_hashes)
-    return hist_hashes.join(delta_hashes, on="content_hash").drop("content_hash")
+    return hist_hashes.join(
+        F.broadcast(delta_hashes), on="content_hash"
+    ).drop("content_hash")
 
 
 def _history_dirs(
@@ -247,11 +341,7 @@ def ingest_batch(
     ``docs`` needs (id, url, text) — raw pages go through
     ``extract_documents`` + ``docs_from_extraction`` first."""
     cfg = config or IngestConfig()
-    if not _BATCH_ID_RE.match(batch_id):
-        raise ValueError(
-            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
-        )
-    root = state_dir.rstrip("/")
+    root = _batch_root(state_dir, batch_id)
     corpus_root = f"{root}/corpus"
     seen_root = f"{root}/seen"
     index_root = f"{root}/index"
@@ -306,9 +396,7 @@ def ingest_batch(
             F.col(id_col),
             content_hash(F.col("redacted_text")).alias("content_hash"),
         )
-        flagged = history_exact_hits(
-            hist_hashes, delta_hashes, cfg.broadcast_delta
-        ).select(id_col)
+        flagged = history_exact_hits(hist_hashes, delta_hashes).select(id_col)
         stamped = _drop_flagged(
             stamped, flagged, id_col, "history_exact", F.lit("seen_content_hash")
         )
@@ -332,7 +420,6 @@ def ingest_batch(
             surv,
             idx,
             tau=cfg.tau,
-            broadcast_new=cfg.broadcast_delta,
             new_banded=surv_banded,
         )
         flagged = verdicts.where(F.col("is_dup")).select(
@@ -474,8 +561,8 @@ def compact_ingest_batch(
            corpus root so the zone-map listing never sees it)
         2. verify sig(tmp) == sig(src); mismatch RAISES, src untouched
         3. compact tmp → src (overwrite; same scan-side packing confs)
-        4. verify sig(src) == sig; then reconcile the zone-map manifest
-           (stale rows drop, new files get footer-statted) and delete tmp
+        4. verify sig(src) == sig; then reconcile both pruning manifests
+           (``_reconcile_manifests``) and delete tmp
 
     Crash recovery makes the op idempotent: on entry, a complete tmp
     (its _SUCCESS present) whose signature matches a DAMAGED src —
@@ -489,21 +576,12 @@ def compact_ingest_batch(
     pre-rewrite file listing and will fail with FileNotFound if
     re-executed — re-read the path after compacting (plain Spark
     overwrite semantics, same as any path rewrite)."""
-    from docling_jobkit_spark.sinks.maintenance import (
-        _list_parquet_files,
-        compact_files,
-        content_signature,
-    )
+    from docling_jobkit_spark.sinks.maintenance import compact_files
 
-    if not _BATCH_ID_RE.match(batch_id):
-        raise ValueError(
-            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
-        )
-    root = state_dir.rstrip("/")
+    root = _batch_root(state_dir, batch_id)
+    _require_committed(spark, root, batch_id, "compact")
     src = f"{root}/corpus/batch={batch_id}"
     tmp = f"{root}/corpus_compact/batch={batch_id}"
-    if not _exists(spark, f"{root}/ledger/batch={batch_id}/_SUCCESS"):
-        raise ValueError(f"batch {batch_id!r} is not committed; refusing to compact")
 
     def _sig(path: str):
         df = spark.read.schema(CORPUS_SCHEMA).parquet(path)
@@ -547,30 +625,8 @@ def compact_ingest_batch(
                 f"recover by re-running (tmp at {tmp} is complete and certified)"
             )
 
-    # manifest reconciliation: stale file rows drop, new files statted
-    zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
-        zm, _n_new, _n_drop = update_zonemap(
-            spark, f"{root}/corpus", read_zonemap(spark, zonemap_dir),
-            ["n_chars"],
-        )
-        write_zonemap(zm.localCheckpoint(eager=True), zonemap_dir)
-    # bloom manifest likewise (indexed columns read off the index
-    # itself, so a rewrite can't silently change coverage)
-    bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
-        bi_prev = read_bloom_index(spark, bloom_dir)
-        bcols = sorted(
-            r["column"] for r in bi_prev.select("column").distinct().collect()
-        )
-        if bcols:
-            bi, _bn, _bd = update_bloom_index(
-                spark, f"{root}/corpus", bi_prev, bcols
-            )
-            write_bloom_index(bi.localCheckpoint(eager=True), bloom_dir)
-
-    fs, jtmp = _fs(spark, tmp)
-    fs.delete(jtmp, True)
+    _reconcile_manifests(spark, root)
+    _delete(spark, tmp)
     return CompactBatchStats(
         batch_id, n_src_files, stats.n_files_after, healed, None
     )
@@ -596,57 +652,25 @@ def expire_batch_payload(
     only, never corpus payload). Replays of the expired batch itself
     still no-op (marker intact) and return an empty ``kept``.
 
-    Torn-safety ordering — the zone-map manifest stops referencing the
-    files BEFORE any file is deleted (``scan_pruned`` reads survivors
-    by explicit manifest path; the reverse order would leave a window
-    where a pruned scan references deleted files):
+    Torn-safety ordering — both pruning manifests stop referencing the
+    files BEFORE any file is deleted (``_drop_manifest_rows``):
 
-        1. rewrite zonemap without this batch's file rows
+        1. rewrite the zone map and Bloom index without this batch's
+           file rows
         2. delete ``corpus/batch=<id>`` (recursive)
         3. delete ``shards/batch=<id>``
 
     A crash between any two steps replays exactly: step 1 is a no-op
     once the rows are gone, deletes are idempotent. Uncommitted batches
     refuse (expiring an in-flight batch would race its writer)."""
-    if not _BATCH_ID_RE.match(batch_id):
-        raise ValueError(
-            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
-        )
-    root = state_dir.rstrip("/")
-    if not _exists(spark, f"{root}/ledger/batch={batch_id}/_SUCCESS"):
-        raise ValueError(f"batch {batch_id!r} is not committed; refusing to expire")
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
-
+    root = _batch_root(state_dir, batch_id)
+    _require_committed(spark, root, batch_id, "expire")
     corpus_dir = f"{root}/corpus/batch={batch_id}"
-    shards_dir = f"{root}/shards/batch={batch_id}"
-
-    # 1. manifests first: drop this batch's file rows (metadata-sized).
-    # BOTH pruning manifests stop referencing the files before any file
-    # is deleted — scan_pruned / scan_pruned_bloom read survivors by
-    # explicit manifest path, so the reverse order would leave a window
-    # where a pruned scan references deleted files.
-    zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
-        zm = read_zonemap(spark, zonemap_dir)
-        keep = zm.where(~F.col("file").contains(f"/batch={batch_id}/"))
-        if keep.count() < zm.count():
-            write_zonemap(keep.localCheckpoint(eager=True), zonemap_dir)
-    bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
-        bi = read_bloom_index(spark, bloom_dir)
-        bkeep = bi.where(~F.col("file").contains(f"/batch={batch_id}/"))
-        if bkeep.count() < bi.count():
-            write_bloom_index(bkeep.localCheckpoint(eager=True), bloom_dir)
-
-    # 2-3. delete payload dirs (idempotent; sizes counted before)
+    _drop_manifest_rows(spark, root, F.col("file").contains(f"/batch={batch_id}/"))
     already = not _exists(spark, corpus_dir)
     n_files = len(_list_parquet_files(spark, corpus_dir)) if not already else 0
-    n_bytes = 0
-    for path in (corpus_dir, shards_dir):
-        if _exists(spark, path):
-            fs, jpath = _fs(spark, path)
-            n_bytes += int(fs.getContentSummary(jpath).getLength())
-            fs.delete(jpath, True)
+    n_bytes = _delete(spark, corpus_dir)
+    n_bytes += _delete(spark, f"{root}/shards/batch={batch_id}")
     return ExpireBatchStats(batch_id, n_files, n_bytes, already)
 
 
@@ -714,11 +738,7 @@ def rollback_batch(
     Reference parity: docling-jobkit's result stores are append-only
     caches with no un-commit (``docling_jobkit/connectors``) — rollback
     completes the snapshot lifecycle alongside expire and takedown."""
-    if not _BATCH_ID_RE.match(batch_id):
-        raise ValueError(
-            f"batch_id must match {_BATCH_ID_RE.pattern}, got {batch_id!r}"
-        )
-    root = state_dir.rstrip("/")
+    root = _batch_root(state_dir, batch_id)
     committed = _committed_batch_dirs(spark, f"{root}/ledger")
     was_committed = batch_id in committed
     if was_committed and not allow_non_latest:
@@ -733,43 +753,23 @@ def rollback_batch(
     # 1. the un-commit point: one marker delete, then the batch is
     # invisible to every reader and the rest is debris cleanup
     if was_committed:
-        fs, jm = _fs(spark, f"{root}/ledger/batch={batch_id}/_SUCCESS")
-        fs.delete(jm, False)
+        _delete(spark, f"{root}/ledger/batch={batch_id}/_SUCCESS")
 
     # 2. manifests first (expire ordering)
-    zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
-        zm = read_zonemap(spark, zonemap_dir)
-        keep = zm.where(~F.col("file").contains(f"/batch={batch_id}/"))
-        if keep.count() < zm.count():
-            write_zonemap(keep.localCheckpoint(eager=True), zonemap_dir)
-    bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
-        bi = read_bloom_index(spark, bloom_dir)
-        bkeep = bi.where(~F.col("file").contains(f"/batch={batch_id}/"))
-        if bkeep.count() < bi.count():
-            write_bloom_index(bkeep.localCheckpoint(eager=True), bloom_dir)
+    _drop_manifest_rows(spark, root, F.col("file").contains(f"/batch={batch_id}/"))
 
     # 3. every per-batch dir, families and tmps alike
-    existed = was_committed
-    n_dirs = 0
-    n_bytes = 0
-    for family in (
-        "corpus", "seen", "index", "shards", "ledger",
-        "corpus_compact", "corpus_takedown", "shards_takedown",
-    ):
-        path = f"{root}/{family}/batch={batch_id}"
-        if _exists(spark, path):
-            existed = True
-            fs, jpath = _fs(spark, path)
-            n_bytes += int(fs.getContentSummary(jpath).getLength())
-            fs.delete(jpath, True)
-            n_dirs += 1
+    dirs = [
+        path
+        for family in _FAMILIES + _TMP_FAMILIES
+        if _exists(spark, path := f"{root}/{family}/batch={batch_id}")
+    ]
+    n_bytes = sum(_delete(spark, path) for path in dirs)
     return RollbackStats(
         batch_id=batch_id,
-        existed=existed,
+        existed=was_committed or bool(dirs),
         was_committed=was_committed,
-        n_dirs_deleted=n_dirs,
+        n_dirs_deleted=len(dirs),
         bytes_reclaimed=n_bytes,
     )
 
@@ -839,7 +839,6 @@ def read_corpus_latest(
     spark: SparkSession,
     state_dir: str,
     on_expired: str = "raise",
-    broadcast_losers: bool = True,
 ) -> DataFrame:
     """Merge-on-read upsert view — the newest copy of every url across
     all committed batches (the Iceberg MOR / ``MERGE INTO`` read-side
@@ -857,9 +856,7 @@ def read_corpus_latest(
     computed on a narrow (doc_id, url, batch) projection (the only
     frame that exchanges), then removed with a broadcast LEFT ANTI join
     on doc_id — document text crosses no Exchange (plan-pinned in
-    tests/test_supersede.py). ``broadcast_losers=False`` opts into a
-    shuffled anti-join for a corpus whose accumulated re-crawl set
-    outgrew the broadcast threshold. doc_id is a sound anti-join key:
+    tests/test_supersede.py). doc_id is a sound anti-join key:
     it hashes (url, content_hash) and content_hash is unique
     corpus-wide (within-batch exact dedup + history_exact).
 
@@ -882,9 +879,7 @@ def read_corpus_latest(
         .where(F.col("batch") < F.col("_newest"))
         .select("doc_id")
     )
-    if broadcast_losers:
-        losers = F.broadcast(losers)
-    return corpus.join(losers, on="doc_id", how="left_anti")
+    return corpus.join(F.broadcast(losers), on="doc_id", how="left_anti")
 
 
 @dataclass(frozen=True)
@@ -929,38 +924,25 @@ def vacuum_ingest_state(
     n_bytes = 0
     n_kept_recovery = 0
 
-    def _batch_dirs(family_root: str):
-        fs, jroot = _fs(spark, family_root)
-        if not fs.exists(jroot):
-            return
-        for st in fs.listStatus(jroot):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("batch="):
-                yield fs, st, name[len("batch="):]
-
-    for family in ("corpus", "seen", "index", "shards", "ledger"):
-        for fs, st, bid in _batch_dirs(f"{root}/{family}"):
+    for family in _FAMILIES:
+        for bid, st, _done in _batch_dirs(spark, f"{root}/{family}"):
             if bid in committed or st.getModificationTime() >= cutoff_ms:
                 continue
-            n_bytes += int(fs.getContentSummary(st.getPath()).getLength())
-            fs.delete(st.getPath(), True)
+            n_bytes += _delete(spark, st.getPath().toString())
             deleted.append(st.getPath().toString())
 
-    jvm = spark.sparkContext._jvm
     # same rule for every two-phase tmp family: compaction tmps plus the
     # takedown tmps (corpus + shards) — an INCOMPLETE tmp is debris (its
     # writer restarts from source), a COMPLETE one is the certified heal
     # copy delete_content / compact_ingest_batch recover from
-    for family in ("corpus_compact", "corpus_takedown", "shards_takedown"):
-        for fs, st, _bid in _batch_dirs(f"{root}/{family}"):
-            marker = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if fs.exists(marker):
+    for family in _TMP_FAMILIES:
+        for _bid, st, done in _batch_dirs(spark, f"{root}/{family}"):
+            if done:
                 n_kept_recovery += 1  # certified heal copy — never vacuumed
                 continue
             if st.getModificationTime() >= cutoff_ms:
                 continue
-            n_bytes += int(fs.getContentSummary(st.getPath()).getLength())
-            fs.delete(st.getPath(), True)
+            n_bytes += _delete(spark, st.getPath().toString())
             deleted.append(st.getPath().toString())
 
     return VacuumStats(
@@ -1033,48 +1015,6 @@ _TAKEDOWN_SCHEMA = CORPUS_SCHEMA + ", src_file string"
 _SHARD_SCHEMA = "text string, url string, content_hash string"
 
 
-def _drop_manifest_rows(spark: SparkSession, root: str, files: list[str]) -> None:
-    """Both pruning manifests stop referencing ``files`` BEFORE any file
-    is deleted (the expire ordering: the reverse leaves a window where a
-    pruned scan references deleted payload). Metadata-sized."""
-    zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
-        zm = read_zonemap(spark, zonemap_dir)
-        keep = zm.where(~F.col("file").isin(files))
-        if keep.count() < zm.count():
-            write_zonemap(keep.localCheckpoint(eager=True), zonemap_dir)
-    bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
-        bi = read_bloom_index(spark, bloom_dir)
-        bkeep = bi.where(~F.col("file").isin(files))
-        if bkeep.count() < bi.count():
-            write_bloom_index(bkeep.localCheckpoint(eager=True), bloom_dir)
-
-
-def _reconcile_manifests(spark: SparkSession, root: str) -> None:
-    """Standard incremental reconciliation after a layout change: stale
-    rows drop, unseen files get footer-statted (O(new files)). Indexed
-    columns are read off each manifest itself."""
-    corpus_root = f"{root}/corpus"
-    zonemap_dir = f"{root}/zonemap"
-    if _exists(spark, f"{zonemap_dir}/_SUCCESS"):
-        zm_prev = read_zonemap(spark, zonemap_dir)
-        zcols = sorted(
-            r["col"] for r in zm_prev.select("col").distinct().collect()
-        ) or ["n_chars"]
-        zm, _n, _d = update_zonemap(spark, corpus_root, zm_prev, zcols)
-        write_zonemap(zm.localCheckpoint(eager=True), zonemap_dir)
-    bloom_dir = f"{root}/bloomidx"
-    if _exists(spark, f"{bloom_dir}/_SUCCESS"):
-        bi_prev = read_bloom_index(spark, bloom_dir)
-        bcols = sorted(
-            r["column"] for r in bi_prev.select("column").distinct().collect()
-        )
-        if bcols:
-            bi, _bn, _bd = update_bloom_index(spark, corpus_root, bi_prev, bcols)
-            write_bloom_index(bi.localCheckpoint(eager=True), bloom_dir)
-
-
 def _apply_takedown_tmp(
     spark: SparkSession, root: str, batch_id: str, tmp_dir: str
 ) -> tuple[int, int]:
@@ -1101,20 +1041,16 @@ def _apply_takedown_tmp(
         # the batch's payload was expired wholesale after this tmp was
         # written — a strictly stronger delete already happened; the
         # manifests dropped the batch's rows at expire time
-        fs, jt = _fs(spark, tmp_dir)
-        fs.delete(jt, True)
+        _delete(spark, tmp_dir)
         return 0, 0
     tmp = spark.read.schema(_TAKEDOWN_SCHEMA).parquet(tmp_dir)
     affected = sorted(
         r["src_file"] for r in tmp.select("src_file").distinct().collect()
     )
-    _drop_manifest_rows(spark, root, affected)
-    n_del = 0
-    for p in affected:
-        fs, jp = _fs(spark, p)
-        if fs.exists(jp):
-            fs.delete(jp, False)
-            n_del += 1
+    _drop_manifest_rows(spark, root, F.col("file").isin(affected))
+    present = [p for p in affected if _exists(spark, p)]
+    for p in present:
+        _delete(spark, p)
     survivors = tmp.where(F.col("content_hash").isNotNull()).select(
         "doc_id", "url", "text", "content_hash", "n_chars"
     )
@@ -1143,9 +1079,8 @@ def _apply_takedown_tmp(
             f"{n_lost} survivors lost, {n_dup} duplicated hashes "
             f"(certified tmp kept at {tmp_dir})"
         )
-    fs, jt = _fs(spark, tmp_dir)
-    fs.delete(jt, True)
-    return n_del, n_add
+    _delete(spark, tmp_dir)
+    return len(present), n_add
 
 
 def _apply_shard_tmp(
@@ -1166,15 +1101,13 @@ def _apply_shard_tmp(
             f"shard takedown copy-back signature mismatch for batch "
             f"{batch_id!r} (certified tmp kept at {tmp_dir})"
         )
-    fs, jt = _fs(spark, tmp_dir)
-    fs.delete(jt, True)
+    _delete(spark, tmp_dir)
 
 
 def delete_content(
     spark: SparkSession,
     state_dir: str,
     hashes: list[str],
-    purge_shards: bool = True,
 ) -> DeleteContentStats:
     """Targeted copy-on-write deletion by content hash — the Iceberg
     ``DELETE FROM`` / GDPR-takedown analog for the ingest layout, and
@@ -1199,8 +1132,8 @@ def delete_content(
     Dedup memory is deliberately KEPT: the deleted content's hash stays
     in the ``seen`` table and its bands stay in the MinHash index, so
     the content can never re-enter the corpus through a later crawl — a
-    takedown tombstone (pinned in tests). Shard purge (``purge_shards``)
-    rewrites the affected batches' JSONL shards batch-granularly
+    takedown tombstone (pinned in tests). Shard purge rewrites the
+    affected batches' JSONL shards batch-granularly
     (count+signature certified, two-phase through
     ``shards_takedown/batch=<id>``); a crash between the corpus apply
     and the shard rewrite is completed by RETRYING the takedown with the
@@ -1308,32 +1241,31 @@ def delete_content(
         batches.add(bid)
 
     # -- shard purge (batch-granular; shards carry content_hash) -------
-    if purge_shards:
-        for bid in sorted(by_batch):
-            sdir = f"{root}/shards/batch={bid}"
-            if not _exists(spark, sdir):
-                continue
-            cur = spark.read.schema(_SHARD_SCHEMA).json(sdir)
-            n_before = cur.count()
-            n_hit = cur.where(F.col("content_hash").isin(targets)).count()
-            if n_hit == 0:
-                continue
-            tmp_dir = f"{sh_tk_root}/batch={bid}"
-            write_training_shards(
-                cur.where(~F.col("content_hash").isin(targets)),
-                tmp_dir,
-                text_col="text",
-                meta_cols=("url", "content_hash"),
+    for bid in sorted(by_batch):
+        sdir = f"{root}/shards/batch={bid}"
+        if not _exists(spark, sdir):
+            continue
+        cur = spark.read.schema(_SHARD_SCHEMA).json(sdir)
+        n_before = cur.count()
+        n_hit = cur.where(F.col("content_hash").isin(targets)).count()
+        if n_hit == 0:
+            continue
+        tmp_dir = f"{sh_tk_root}/batch={bid}"
+        write_training_shards(
+            cur.where(~F.col("content_hash").isin(targets)),
+            tmp_dir,
+            text_col="text",
+            meta_cols=("url", "content_hash"),
+        )
+        n_tmp = spark.read.schema(_SHARD_SCHEMA).json(tmp_dir).count()
+        if n_tmp != n_before - n_hit:
+            raise RuntimeError(
+                f"shard takedown tmp row count mismatch for batch "
+                f"{bid!r} ({n_tmp} != {n_before} - {n_hit}); real "
+                f"shards untouched"
             )
-            n_tmp = spark.read.schema(_SHARD_SCHEMA).json(tmp_dir).count()
-            if n_tmp != n_before - n_hit:
-                raise RuntimeError(
-                    f"shard takedown tmp row count mismatch for batch "
-                    f"{bid!r} ({n_tmp} != {n_before} - {n_hit}); real "
-                    f"shards untouched"
-                )
-            _apply_shard_tmp(spark, root, bid, tmp_dir)
-            n_shards += 1
+        _apply_shard_tmp(spark, root, bid, tmp_dir)
+        n_shards += 1
 
     # -- final certificate: no target row anywhere in the corpus -------
     after, _k2, _t2 = locate_content(spark, root, targets)
@@ -1364,7 +1296,6 @@ def supersede_batch(
     spark: SparkSession,
     state_dir: str,
     batch_id: str,
-    purge_shards: bool = True,
 ) -> SupersedeStats:
     """Copy-on-write upsert — materialize ``read_corpus_latest`` for one
     committed batch (the Iceberg ``MERGE INTO``/COW write-side analog):
@@ -1431,9 +1362,7 @@ def supersede_batch(
     targets = sorted(r["content_hash"] for r in hits.distinct().collect())
     if not targets:
         return SupersedeStats(batch_id, n_urls, 0, None)
-    del_stats = delete_content(
-        spark, root, targets, purge_shards=purge_shards
-    )
+    del_stats = delete_content(spark, root, targets)
     return SupersedeStats(batch_id, n_urls, len(targets), del_stats)
 
 
@@ -1681,8 +1610,6 @@ def ingest_state_report(spark: SparkSession, state_dir: str) -> DataFrame:
     batches whose corpus dir was reclaimed by ``expire_batch_payload``
     (dir ABSENT — distinct from an all-dropped batch's marker-only
     empty dir, which reports 0 files but is not expired)."""
-    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
-
     root = state_dir.rstrip("/")
     batches = _committed_batch_dirs(spark, f"{root}/ledger")
     # ONE Spark job for every batch's ledger endpoints: all committed

@@ -203,7 +203,7 @@ def test_seen_probe_broadcasts_delta_never_shuffles_history(spark, state):
     delta = spark.range(100).select(
         F.col("id").alias("doc_id"), F.sha2(F.col("id").cast("string"), 256).alias("content_hash")
     )
-    hits = history_exact_hits(hist, delta, broadcast_delta=True)
+    hits = history_exact_hits(hist, delta)
     plan = hits._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -368,6 +368,33 @@ def test_compact_ingest_batch_preserves_content_and_manifest(spark, sf_dir, tmp_
         for r in spark.read.parquet(src).collect()
     }
     assert got2 == want
+
+
+def test_compact_ingest_batch_keeps_every_zonemap_column(spark, sf_dir, tmp_path):
+    """Compaction re-stats the rewritten files for every column the zone
+    map indexes, not just the default one."""
+    from docling_jobkit_spark.operators.zonemap import read_zonemap
+    from docling_jobkit_spark.plans.ingest import compact_ingest_batch
+
+    root = str(tmp_path / "state")
+    cfg = IngestConfig(
+        curation=CurationConfig(), tau=0.8, zonemap_cols=("n_chars", "doc_id")
+    )
+    a, _ = _batch_a(spark, sf_dir)
+    ingest_batch(spark, a, root, "c1", config=cfg)
+    _fragment(spark, f"{root}/corpus/batch=c1")
+
+    stats = compact_ingest_batch(spark, root, "c1")
+    assert stats.skipped is None
+    zm = read_zonemap(spark, f"{root}/zonemap").where(
+        F.col("file").contains("/batch=c1/")
+    )
+    assert {r["col"] for r in zm.select("col").distinct().collect()} == {
+        "doc_id",
+        "n_chars",
+    }
+    per_file = zm.groupBy("file").agg(F.countDistinct("col").alias("n"))
+    assert per_file.where(F.col("n") != 2).count() == 0
 
 
 def test_compact_ingest_batch_heals_torn_copy_back(spark, sf_dir, tmp_path):
@@ -999,6 +1026,33 @@ def test_delete_content_spans_batches(spark, sf_dir, tmp_path):
     assert content_signature(corpus_after, key_col="content_hash") == want_sig
     gone, _k, _t = locate_content(spark, root, [t_a, t_b])
     assert gone.count() == 0
+
+
+def test_delete_content_in_single_file_corpus_keeps_bloom_coverage(
+    spark, sf_dir, tmp_path
+):
+    """A takedown whose one affected file is the whole corpus empties
+    the Bloom manifest before the replacement file lands; the reconcile
+    must index that file again, or every later lookup misses."""
+    from docling_jobkit_spark.plans.ingest import (
+        compact_ingest_batch,
+        delete_content,
+        locate_content,
+    )
+    from docling_jobkit_spark.sinks.maintenance import _list_parquet_files
+
+    root = str(tmp_path / "state")
+    a, _ = _batch_a(spark, sf_dir)
+    res = ingest_batch(spark, a, root, "2026-01", config=CFG)
+    target, survivor = [
+        r["content_hash"] for r in res.kept.orderBy("doc_id").limit(2).collect()
+    ]
+    compact_ingest_batch(spark, root, "2026-01")
+    assert len(_list_parquet_files(spark, f"{root}/corpus")) == 1
+
+    delete_content(spark, root, [target])
+    hits, kept, total = locate_content(spark, root, [survivor])
+    assert hits.count() == 1 and kept == total == 1
 
 
 def test_ingest_drift_report_flags_planted_drift(spark, sf_dir, tmp_path):
